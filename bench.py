@@ -75,23 +75,24 @@ def main() -> None:
 
     for name, fn in qs.items():
         print(f"# bench start {name}", file=sys.stderr, flush=True)
-        best = None
+        runs: list[float] = []
+        failed = False
         for _ in range(n_runs):
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
-                dt = round(time.time() - t0, 3)
-                best = dt if best is None or best < 0 else min(best, dt)
+                runs.append(round(time.time() - t0, 3))
             except Exception as ex:  # record failures distinctly, keep going
-                if best is None:
-                    best = -1.0
+                failed = True
                 print(f"# bench error {name}: {type(ex).__name__}: {str(ex)[:200]}", file=sys.stderr)
             finally:
                 # operator-internal persists are per-query staging; release so
                 # one query's cached blocks never skew the next run's budget
                 release_caches()
-        timings[name] = best if best is not None else -1.0
+        # a query that raised on ANY of its runs is a failure (-1), never
+        # the min of its surviving runs
+        timings[name] = -1.0 if failed else min(runs)
         if timings[name] >= 0:
             print(f"# bench done  {name} {timings[name]}s", file=sys.stderr, flush=True)
 

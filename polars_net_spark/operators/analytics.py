@@ -999,20 +999,15 @@ def gini_coefficient(
         )
     else:
         from .._cache import register_cache
-        from .distsort import with_bucket_offsets
+        from .distsort import with_sums_below
 
         d = register_cache(
             sdf.filter(v.isNotNull())
             .groupBy(v.alias("__x__"))
             .agg(F.count(F.lit(1)).alias("__c__"))
         )
-        d3, gb, _tot = with_bucket_offsets(d, "__x__", {"cnt": F.col("__c__")})
-        wexcl = (
-            Window.partitionBy(gb)
-            .orderBy(F.col("__x__"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        m = F.col("__off_cnt__") + F.coalesce(F.sum("__c__").over(wexcl), F.lit(0))
+        d3, _tot = with_sums_below(d, "__x__", {"cnt": F.col("__c__")})
+        m = F.col("__below_cnt__")
         c = F.col("__c__")
         run_iw = F.col("__x__") * (c * m + c * (c + 1) / 2.0)
         staged = d3.select(
@@ -2382,7 +2377,7 @@ def log_rank_test(
 
     Output (1 row): n, group_one, o1 (observed), e1 (expected), var,
     chi2 (null when var = 0; feed (chi2, df=1) to a χ² CDF driver-side)."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     sdf = _sdf(frame)
     t = F.col(time_col).cast("double")
@@ -2408,18 +2403,9 @@ def log_rank_test(
             F.count(F.lit(1)).alias("m"),
         )
     )
-    offs, gb, tot = with_bucket_offsets(
-        cells, "__t__", {"m1": F.col("m1"), "m": F.col("m")}
-    )
-    wexcl = (
-        Window.partitionBy(gb).orderBy("__t__").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    n1r = F.lit(float(tot["m1"])) - (
-        F.col("__off_m1__") + F.coalesce(F.sum("m1").over(wexcl), F.lit(0))
-    )
-    nr = F.lit(float(tot["m"])) - (
-        F.col("__off_m__") + F.coalesce(F.sum("m").over(wexcl), F.lit(0))
-    )
+    offs, tot = with_sums_below(cells, "__t__", {"m1": F.col("m1"), "m": F.col("m")})
+    n1r = F.lit(float(tot["m1"])) - F.col("__below_m1__")
+    nr = F.lit(float(tot["m"])) - F.col("__below_m__")
     # materialize the at-risk window columns BEFORE the d>0 filter — the
     # cumulative entry counts must run over ALL distinct times, including
     # censoring-only ones
@@ -3253,7 +3239,7 @@ def weibull_fit(
     shape_k, scale_lambda, r2, n, n_excluded."""
     import math
 
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
@@ -3263,7 +3249,7 @@ def weibull_fit(
         F.count(F.lit(1)).alias("__c__")
     )
     all_cells = all_cells.persist()
-    # n<3 raises and with_range_buckets/with_prefix_offsets can fail on
+    # n<3 raises and with_sums_below can fail on
     # degenerate input — the finally keeps those paths from leaking the
     # cached frame (the cox_ph precedent)
     try:
@@ -3272,14 +3258,11 @@ def weibull_fit(
         ).collect()[0]
         n_excluded = int(nexc_row["x"] or 0)
         cells = all_cells.filter(F.col("__v__") > 0)
-        offs, gb, tot = with_bucket_offsets(cells, "__v__", {"c": F.col("__c__")})
+        offs, tot = with_sums_below(cells, "__v__", {"c": F.col("__c__")})
         n = int(tot["c"])
         if n < 3:
             raise ValueError("weibull_fit needs at least 3 positive values")
-        w = Window.partitionBy(gb).orderBy("__v__").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        c0 = F.col("__off_c__") + F.coalesce(F.sum("__c__").over(w), F.lit(0.0))
+        c0 = F.col("__below_c__")
         # stage the window result before the explode — Spark cannot analyze a
         # window expression nested inside a generator in one projection
         staged = offs.select(

@@ -6,16 +6,15 @@ partition spec moves EVERY row to one task for the global sort (an OOM at
 corpus scale).  The distributed equivalent of "global rank / global running
 total" used here:
 
-1. **Bucket boundaries** from ONE ``percentile_approx`` aggregate (a
+1. **Bucket bounds** from ONE ``percentile_approx`` aggregate (a
    Greenwald–Khanna sketch — constant executor memory, one small driver
    row).  Unlike ``repartitionByRange`` (whose sampled boundaries differ
-   between re-executions of the same plan), the collected boundaries become
+   between re-executions of the same plan), the collected bounds become
    *plan literals*, so bucket assignment is a pure deterministic function of
    the value — consistent across the totals pass and the main pass.
-2. **Bucket id** = number of boundary literals strictly below (asc) /
-   above (desc) the value.  Ties share a bucket by construction (the id is a
-   function of the value alone), so tie-averaged ranks never split across
-   buckets.
+2. **Bucket id** = number of bounds strictly below (asc) / above (desc) the
+   value.  Ties share a bucket by construction (the id is a function of the
+   value alone), so tie-averaged ranks never split across buckets.
 3. **Per-bucket totals** from one map-side-combining aggregate, collected
    (≤ nbuckets rows) and prefix-summed on the driver; the exclusive prefix
    comes back as a ``create_map`` plan literal.
@@ -23,17 +22,52 @@ total" used here:
    ``Window.partitionBy(bucket).orderBy(value)`` within-bucket cumulant —
    every window task holds ~1/nbuckets of the data.
 
-Skewed boundaries (a value spanning whole quantile steps) merely leave some
-buckets empty/hot in proportion to the tie mass — the same exposure a keyed
+**Bounds contract.**  ``_bounds`` is the one sketch expression.  It
+deduplicates, drops nulls and sorts the sketch IN THE PLAN (Spark order, so
+at most one NaN and it sorts last), and that array is used as-is both for
+the live bucket id inside the fused job and for the literal id of the
+returned frame.  Live and literal ids therefore agree on every value,
+including NaN and ±inf, and ids are contiguous along the value axis (every
+bound is a data value) — ±1-neighbor consumers such as
+``with_halo_buckets`` rely on that.
+
+Skewed bounds (a value spanning whole quantile steps) merely leave some
+buckets hot in proportion to the tie mass — the same exposure a keyed
 window has to a hot key, and tunable via ``nbuckets``.
 
-Beyond-reference scaffolding (the reference computes rank statistics on a
-single node); consumers: roc_auc / average_precision (llm/evaluation.py),
-mann_whitney_u / spearman_corr (operators/regression.py),
-with_rank_normalized (operators/analytics.py).
+Entry points and their consumers (the reference computes these rank
+statistics on a single node):
+
+- ``with_bucket_offsets`` — sketch + per-bucket totals in ONE driver job;
+  the running-total / global-position consumers in operators/regression.py,
+  operators/analytics.py, operators/mleval.py, operators/describe.py,
+  llm/evaluation.py and llm/text.py.
+- ``with_sums_below`` — per distinct value, each sum over all strictly
+  smaller values.  It REQUIRES one row per distinct value (a cell table);
+  consumers: mann_whitney_u, spearman_corr, energy_distance, pettitt_test,
+  cramer_von_mises, kruskal_wallis, wilcoxon_signed_rank, brunner_munzel
+  (regression.py), auc_report (mleval.py), gini_coefficient,
+  log_rank_test, weibull_fit (analytics.py), roc_auc (llm/evaluation.py),
+  and the exact_quantiles resolver below.
+- ``with_range_buckets`` + ``with_prefix_offsets`` — the two-job form, for
+  consumers that bucket once and total several frames or keys: the
+  unkeyed ewm paths (ewm.py), median_ci and cox_ph (regression.py),
+  pareto_front, with_rank_normalized, survival_curve, sessionize and
+  wasserstein_1d (analytics.py).
+- ``with_halo_buckets`` — range buckets plus neighbor halo rows for
+  unkeyed bounded-window sequence ops (seasonal_decompose, acf, rmst,
+  sessionize, durbin_watson, ljung_box, ...).
+- ``cell_ranks`` — tie-aware ranks from the distinct (key, value) table.
+- ``exact_quantiles`` / ``exact_quantiles_multi`` — exact interpolated
+  quantiles (winsorize, with_qcut, trimmed_mean_by_key, lift_table,
+  with_scaled).
 """
 
 from __future__ import annotations
+
+import bisect
+import itertools
+import math
 
 from pyspark.sql import Column, DataFrame as SparkDF, Window
 from pyspark.sql import functions as F
@@ -41,6 +75,8 @@ from pyspark.sql import functions as F
 __all__ = ["with_range_buckets", "with_prefix_offsets", "BUCKET_COL"]
 
 BUCKET_COL = "__gb__"
+# percentile_approx accuracy: rank error of a bound <= 1/_ACCURACY
+_ACCURACY = 10_000
 
 
 def _default_nbuckets(sdf: SparkDF) -> int:
@@ -50,12 +86,33 @@ def _default_nbuckets(sdf: SparkDF) -> int:
         return 32
 
 
+def _bounds(c: Column, nbuckets: int) -> Column:
+    """The bucket bounds of ``c``: the sketch's ``nbuckets - 1`` quantiles,
+    deduplicated, null-free and sorted (NaN last) — see the bounds
+    contract in the module docstring.  Null when ``c`` has no rows."""
+    qs = F.array(*[F.lit(i / nbuckets) for i in range(1, nbuckets)])
+    sketch = F.percentile_approx(c, qs, F.lit(_ACCURACY))
+    return F.array_sort(F.array_distinct(F.filter(sketch, lambda b: b.isNotNull())))
+
+
+def _bucket_id(c: Column, bounds: Column, desc: bool) -> Column:
+    # strictly-below/above, so a value equal to a bound stays in the lower
+    # (asc) / higher-scoring (desc) bucket with its boundary twin
+    return F.size(F.filter(bounds, (lambda b: b > c) if desc else (lambda b: b < c)))
+
+
+def _literal_bucket_id(col_name: str, bounds: "list[float]", desc: bool) -> Column:
+    if not bounds:
+        return F.lit(0)
+    c = F.col(col_name).cast("double")
+    return _bucket_id(c, F.array(*[F.lit(float(b)) for b in bounds]), desc)
+
+
 def with_range_buckets(
     sdf: SparkDF,
     col_name: str,
     desc: bool = False,
     nbuckets: int | None = None,
-    accuracy: int = 10_000,
 ) -> tuple[SparkDF, str]:
     """Attach ``BUCKET_COL``: a deterministic range-bucket id that increases
     along the requested ordering of ``col_name`` (must be numeric and
@@ -64,48 +121,20 @@ def with_range_buckets(
     ``sdf`` — persist it upstream if the plan is expensive)."""
     if nbuckets is None:
         nbuckets = _default_nbuckets(sdf)
-    c = F.col(col_name).cast("double")
+    bounds: "list[float]" = []
     if nbuckets > 1:
-        qs = [i / nbuckets for i in range(1, nbuckets)]
-        row = sdf.agg(
-            F.percentile_approx(
-                c, F.array(*[F.lit(q) for q in qs]), F.lit(int(accuracy))
-            ).alias("b")
-        ).first()
-        raw = row["b"] if row is not None else None
-        bounds = sorted({float(b) for b in (raw or []) if b is not None})
-    else:
-        bounds = []
-    if not bounds:
-        return sdf.withColumn(BUCKET_COL, F.lit(0)), BUCKET_COL
-    arr = F.array(*[F.lit(b) for b in bounds])
-    # strictly-below/above so a value equal to a boundary stays in the lower
-    # (asc) / higher-scoring (desc) bucket — any consistent rule works, this
-    # one keeps ties with their boundary twin
-    pred = (lambda b: b > c) if desc else (lambda b: b < c)
-    bucket = F.size(F.filter(arr, pred))
-    return sdf.withColumn(BUCKET_COL, bucket), BUCKET_COL
+        # a global aggregate always returns exactly one row
+        row = sdf.agg(_bounds(F.col(col_name).cast("double"), nbuckets).alias("b")).first()
+        bounds = list(row["b"] or [])
+    return sdf.withColumn(BUCKET_COL, _literal_bucket_id(col_name, bounds, desc)), BUCKET_COL
 
 
-def with_prefix_offsets(
-    sdf: SparkDF,
-    bucket_col: str,
-    sums: "dict[str, Column]",
-    offset_prefix: str = "__off_",
+def _attach_offsets(
+    sdf: SparkDF, bucket_col: str, rows: list, names: "list[str]"
 ) -> tuple[SparkDF, "dict[str, float]"]:
-    """For each named expression, attach ``__off_<name>__`` = its total over
-    all STRICTLY EARLIER buckets, so a global running total is
-    ``__off_x__ + <within-bucket cumulative>``.  One map-side-combining
-    aggregate, ≤ nbuckets rows to the driver, offsets return as a
-    ``create_map`` literal.  Also returns the grand totals (exact — sums of
-    the per-bucket longs/doubles)."""
-    names = list(sums)
-    rows = (
-        sdf.groupBy(bucket_col)
-        .agg(*[F.sum(sums[n]).alias(n) for n in names])
-        .collect()
-    )
-    rows.sort(key=lambda r: r[bucket_col])
+    """From per-bucket total ``rows`` (sorted by bucket id), attach
+    ``__off_<name>__`` = the total over all strictly earlier buckets, as a
+    ``create_map`` literal; returns the grand totals too."""
     offsets: dict[str, dict[int, float]] = {n: {} for n in names}
     totals: dict[str, float] = {n: 0 for n in names}
     for r in rows:
@@ -114,7 +143,6 @@ def with_prefix_offsets(
             totals[n] += r[n] or 0
     out = sdf
     for n in names:
-        col_name = f"{offset_prefix}{n}__"
         if offsets[n]:
             m = F.create_map(
                 *[
@@ -126,23 +154,28 @@ def with_prefix_offsets(
             off = F.coalesce(F.element_at(m, F.col(bucket_col)), F.lit(0.0))
         else:
             off = F.lit(0.0)
-        out = out.withColumn(col_name, off)
+        out = out.withColumn(f"__off_{n}__", off)
     return out, totals
 
 
-def _bucket_pred(c: Column, desc: bool):
-    # strictly-below/above, as in with_range_buckets; a null boundary
-    # element fails the predicate and drops out of the filtered array,
-    # matching the literal path which skips None bounds
-    return (lambda b: b > c) if desc else (lambda b: b < c)
-
-
-def _bucket_literal_expr(col_name: str, bounds: "list[float]", desc: bool) -> Column:
-    c = F.col(col_name).cast("double")
-    if not bounds:
-        return F.lit(0)
-    arr = F.array(*[F.lit(b) for b in bounds])
-    return F.size(F.filter(arr, _bucket_pred(c, desc)))
+def with_prefix_offsets(
+    sdf: SparkDF,
+    bucket_col: str,
+    sums: "dict[str, Column]",
+) -> tuple[SparkDF, "dict[str, float]"]:
+    """For each named expression, attach ``__off_<name>__`` = its total over
+    all STRICTLY EARLIER buckets, so a global running total is
+    ``__off_x__ + <within-bucket cumulative>``.  One map-side-combining
+    aggregate, ≤ nbuckets rows to the driver, offsets return as a
+    ``create_map`` literal.  Also returns the grand totals (exact — sums of
+    the per-bucket longs/doubles)."""
+    rows = (
+        sdf.groupBy(bucket_col)
+        .agg(*[F.sum(e).alias(n) for n, e in sums.items()])
+        .collect()
+    )
+    rows.sort(key=lambda r: r[bucket_col])
+    return _attach_offsets(sdf, bucket_col, rows, list(sums))
 
 
 def _fused_sketch_sums(
@@ -151,41 +184,24 @@ def _fused_sketch_sums(
     sums: "dict[str, Column]",
     desc: bool,
     nbuckets: "int | None",
-    accuracy: int,
 ) -> "tuple[list[float], list]":
-    """ONE driver job computing the boundary sketch AND the per-bucket sums:
-    the ``percentile_approx`` aggregate rides a broadcast single-row cross
-    join, the live bucket id derives from that array column, and the
-    boundary array comes back WITH the collected per-bucket rows (``first``
-    per group — every group shares the one broadcast row).  Returns
-    ``(bounds, rows sorted by bucket id)``; bounds are the DEDUPED sorted
-    boundary set, and the live bucket id counts the array_distinct'ed
-    array, so a literal re-derivation counts exactly the same distinct
-    boundary set the live expression counted AND ids stay contiguous along
-    the value axis (required by ±1-neighbor consumers like
-    with_halo_buckets)."""
+    """ONE driver job computing the bucket bounds AND the per-bucket sums:
+    the one-row ``_bounds`` aggregate rides a broadcast cross join, the live
+    bucket id derives from that array column, and the array comes back with
+    the collected per-bucket rows.  Returns ``(bounds, rows sorted by
+    bucket id)``; the bounds are that same array, so a literal id built
+    from them equals the live id on every value."""
     if nbuckets is None:
         nbuckets = _default_nbuckets(sdf)
-    names = list(sums)
-    c = F.col(col_name).cast("double")
+    aggs = [F.sum(e).alias(n) for n, e in sums.items()]
+    bounds: "list[float]" = []
     if nbuckets > 1:
-        qs = [i / nbuckets for i in range(1, nbuckets)]
-        bnd = sdf.agg(
-            F.percentile_approx(
-                c, F.array(*[F.lit(q) for q in qs]), F.lit(int(accuracy))
-            ).alias("__bnds__")
-        )
-        # DEDUP the boundary multiset in-plan: bucket id must equal the
-        # count of DISTINCT bounds beyond the value, exactly as
-        # with_range_buckets' literal path computes it — duplicated sketch
-        # bounds would leave GAPS in the id sequence, which breaks any
-        # consumer doing ±1 arithmetic on bucket ids (with_halo_buckets'
-        # neighbor assignment silently lost its halo rows on small/tied
-        # inputs until this matched)
+        c = F.col(col_name).cast("double")
+        bnd = sdf.agg(_bounds(c, nbuckets).alias("__bnds__"))
         bucket_live = F.when(F.col("__bnds__").isNull(), F.lit(0)).otherwise(
-            F.size(F.filter(F.array_distinct(F.col("__bnds__")), _bucket_pred(c, desc)))
+            _bucket_id(c, F.col("__bnds__"), desc)
         )
-        # the boundary ARRAY rides as a second GROUP KEY (identical for all
+        # the bounds ARRAY rides as a second GROUP KEY (identical for all
         # rows — same broadcast row), NOT as a first() aggregate: an
         # array-typed aggregate buffer forces SortAggregate + a full sort
         # of the data-sized stream, while array group keys keep the
@@ -194,20 +210,13 @@ def _fused_sketch_sums(
         rows = (
             sdf.crossJoin(F.broadcast(bnd))
             .groupBy(bucket_live.alias(BUCKET_COL), F.col("__bnds__"))
-            .agg(*[F.sum(sums[n]).alias(n) for n in names])
+            .agg(*aggs)
             .collect()
         )
-        raw = rows[0]["__bnds__"] if rows else None
-        # sorted-set dedup, matching both the live array_distinct above and
-        # with_range_buckets' historical literal construction
-        bounds = sorted({float(b) for b in (raw or []) if b is not None})
+        if rows:
+            bounds = list(rows[0]["__bnds__"] or [])
     else:
-        rows = (
-            sdf.groupBy(F.lit(0).alias(BUCKET_COL))
-            .agg(*[F.sum(sums[n]).alias(n) for n in names])
-            .collect()
-        )
-        bounds = []
+        rows = sdf.groupBy(F.lit(0).alias(BUCKET_COL)).agg(*aggs).collect()
     rows.sort(key=lambda r: r[BUCKET_COL])
     return bounds, rows
 
@@ -218,50 +227,46 @@ def with_bucket_offsets(
     sums: "dict[str, Column]",
     desc: bool = False,
     nbuckets: int | None = None,
-    accuracy: int = 10_000,
-    offset_prefix: str = "__off_",
 ) -> tuple[SparkDF, str, "dict[str, float]"]:
     """Fused ``with_range_buckets`` + ``with_prefix_offsets``: ONE driver job
-    instead of two.  The boundary sketch and the per-bucket totals are
-    computed together — the ``percentile_approx`` aggregate is attached to
-    the rows as a broadcast single-row cross join, the bucket id is derived
-    from that array column, and the per-bucket sums are collected WITH the
-    boundary array riding along (``first`` per group, all groups share the
-    one broadcast row).  The collected boundaries then become plan literals
-    for the returned DataFrame, exactly as the two-job shape produced:
-    bucket choice is result-invariant, and here the literal ids reproduce
-    the fused job's ids by construction (same raw array, same strict
-    comparison), so the offsets/totals and the final pass agree on every
-    bucket.  Returns ``(sdf + BUCKET_COL + __off_<name>__ columns,
-    BUCKET_COL, grand totals)`` — the same contract as calling the two
-    helpers in sequence."""
-    bounds, rows = _fused_sketch_sums(sdf, col_name, sums, desc, nbuckets, accuracy)
-    names = list(sums)
-    out = sdf.withColumn(BUCKET_COL, _bucket_literal_expr(col_name, bounds, desc))
-    offsets: dict[str, dict[int, float]] = {n: {} for n in names}
-    totals: dict[str, float] = {n: 0 for n in names}
-    for r in rows:
-        for n in names:
-            offsets[n][r[BUCKET_COL]] = totals[n]
-            totals[n] += r[n] or 0
-    for n in names:
-        col_out = f"{offset_prefix}{n}__"
-        if offsets[n]:
-            m = F.create_map(
-                *[
-                    lit
-                    for k, v in offsets[n].items()
-                    for lit in (F.lit(int(k)), F.lit(float(v)))
-                ]
-            )
-            off = F.coalesce(F.element_at(m, F.col(BUCKET_COL)), F.lit(0.0))
-        else:
-            off = F.lit(0.0)
-        out = out.withColumn(col_out, off)
+    instead of two (``_fused_sketch_sums``).  The collected bounds then
+    become plan literals for the returned DataFrame, and since they are the
+    very array the fused job bucketed by, the offsets/totals and the final
+    pass agree on every bucket.  Returns ``(sdf + BUCKET_COL +
+    __off_<name>__ columns, BUCKET_COL, grand totals)`` — the same contract
+    as calling the two helpers in sequence."""
+    bounds, rows = _fused_sketch_sums(sdf, col_name, sums, desc, nbuckets)
+    bucketed = sdf.withColumn(BUCKET_COL, _literal_bucket_id(col_name, bounds, desc))
+    out, totals = _attach_offsets(bucketed, BUCKET_COL, rows, list(sums))
     return out, BUCKET_COL, totals
 
 
-__all__.append("with_bucket_offsets")
+def with_sums_below(
+    cells: SparkDF,
+    value_col: str,
+    sums: "dict[str, Column]",
+) -> tuple[SparkDF, "dict[str, float]"]:
+    """For a cell table with ONE ROW PER DISTINCT ``value_col`` value, attach
+    ``__below_<name>__`` = each sum over all strictly smaller values (0 for
+    the smallest) — e.g. the count below a value, from which its average
+    rank is ``below + (count + 1) / 2``.  One ``with_bucket_offsets`` job
+    plus an exclusive within-bucket window; the bucket and offset columns
+    are dropped again.  Returns ``(cells + __below_<name>__ columns, grand
+    totals)``."""
+    out, gb, totals = with_bucket_offsets(cells, value_col, sums)
+    w = Window.partitionBy(gb).orderBy(value_col).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    below = [
+        (F.col(f"__off_{n}__") + F.coalesce(F.sum(e).over(w), F.lit(0))).alias(
+            f"__below_{n}__"
+        )
+        for n, e in sums.items()
+    ]
+    return out.select(*cells.columns, *below), totals
+
+
+__all__.extend(["with_bucket_offsets", "with_sums_below"])
 
 
 HALO_COL = "__halo__"
@@ -309,11 +314,9 @@ def with_halo_buckets(
     # FUSED (r13): the boundary sketch and the per-bucket counts come from
     # ONE driver job (the with_bucket_offsets machinery) instead of the
     # sketch action + counts.collect() pair
-    bounds, counts = _fused_sketch_sums(
-        sdf, order_col, {"count": F.lit(1)}, False, nbuckets, 10_000
-    )
+    bounds, counts = _fused_sketch_sums(sdf, order_col, {"count": F.lit(1)}, False, nbuckets)
     bcol = BUCKET_COL
-    bucketed = sdf.withColumn(bcol, _bucket_literal_expr(order_col, bounds, False))
+    bucketed = sdf.withColumn(bcol, _literal_bucket_id(order_col, bounds, False))
     # coalesce thin buckets: every surviving bucket must hold >= need rows
     # so its halo alone can complete the neighbor's window
     need = max(before, after)
@@ -476,11 +479,81 @@ def cell_ranks(
 __all__.append("cell_ranks")
 
 
+def _check_probs(probs: "list[float]") -> None:
+    for p in probs:
+        if not (0.0 <= p <= 1.0):
+            raise ValueError("each prob must be in [0, 1]")
+
+
+def _percentile_fallback(sdf, col, probs) -> "list[float | None]":
+    c = F.col(col) if isinstance(col, str) else col
+    row = sdf.agg(
+        F.percentile(
+            c.cast("double"), F.array(*[F.lit(float(p)) for p in probs])
+        ).alias("b")
+    ).first()
+    arr = row["b"] if row is not None else None
+    return [None] * len(probs) if arr is None else [float(x) for x in arr]
+
+
+def _order_stats(
+    sdf: SparkDF, col, dv: SparkDF, ndv: int, probs: "list[float]", driver_threshold: int
+) -> "list[float | None]":
+    """Resolve the quantiles of ``col`` from ``dv``, its (``__v__``,
+    ``__cnt__``) distinct-value count table of ``ndv`` rows.  At most
+    ``driver_threshold`` rows resolve driver-side from the collected pairs;
+    above it ``with_sums_below`` gives each value its 0-based order-statistic
+    span [below, below+cnt-1] and every needed order statistic resolves in
+    ONE fused conditional reduce.  Both sides interpolate as Spark's
+    Percentile does: pos = (n-1)·p, lower + (higher-lower)·(pos-floor(pos)).
+    A NaN value falls back to the single-reducer ``F.percentile``."""
+    if ndv == 0:
+        return [None] * len(probs)
+    if ndv <= int(driver_threshold):
+        pairs = sorted((r["__v__"], int(r["__cnt__"])) for r in dv.collect())
+        if any(math.isnan(v) for v, _ in pairs):
+            return _percentile_fallback(sdf, col, probs)
+        n = sum(cnt for _, cnt in pairs)
+        cum = list(itertools.accumulate(cnt for _, cnt in pairs))
+
+        def at(k: int) -> float:
+            return float(pairs[bisect.bisect_right(cum, k)][0])
+
+    else:
+        if dv.filter(F.isnan("__v__")).limit(1).count():
+            return _percentile_fallback(sdf, col, probs)
+        spans, totals = with_sums_below(dv, "__v__", {"c": F.col("__cnt__")})
+        n = int(totals["c"] or 0)
+        if n == 0:
+            return [None] * len(probs)
+        targets = sorted(
+            {k for p in probs for k in (math.floor((n - 1) * p), math.ceil((n - 1) * p))}
+        )
+        start = F.col("__below_c__")
+        row = spans.agg(
+            *[
+                F.min(
+                    F.when((start <= i) & (F.lit(i) < start + F.col("__cnt__")), F.col("__v__"))
+                ).alias(f"t{i}")
+                for i in targets
+            ]
+        ).first()
+
+        def at(k: int) -> float:
+            return float(row[f"t{k}"])
+
+    out: "list[float | None]" = []
+    for p in probs:
+        pos = (n - 1) * float(p)
+        lo_v, hi_v = at(int(math.floor(pos))), at(int(math.ceil(pos)))
+        out.append(lo_v + (hi_v - lo_v) * (pos - math.floor(pos)))
+    return out
+
+
 def exact_quantiles(
     sdf: SparkDF,
     col,
     probs: "list[float]",
-    nbuckets: "int | None" = None,
     driver_threshold: int = 65_536,
 ) -> "list[float | None]":
     """EXACT linear-interpolation quantiles of one numeric column as driver
@@ -491,16 +564,14 @@ def exact_quantiles(
     scale — this keeps the exact answer instead).
 
     Shape: values collapse to a persisted DISTINCT-value count table
-    (map-side combine), range buckets + driver prefix offsets give each
-    distinct value its 0-based order-statistic span [start, start+cnt-1],
-    and every requested order statistic resolves in ONE fused conditional
-    reduce.  Interpolation follows Spark's Percentile exactly:
-    pos = (n-1)·p, result = lower + (higher-lower)·(pos-floor(pos)).
+    (map-side combine) and ``_order_stats`` resolves the order statistics
+    against it.  Interpolation follows Spark's Percentile exactly.
 
     NaN values would need Spark's NaN-sorts-last convention inside the
-    range bucketing; they are rare and data-quality-suspect, so that case
-    falls back to the single-reducer ``F.percentile`` (same result).
-    Returns one float per prob, or Nones when the column has no rows.
+    order-statistic arithmetic; they are rare and data-quality-suspect, so
+    that case falls back to the single-reducer ``F.percentile`` (same
+    result).  Returns one float per prob, or Nones when the column has no
+    rows.
 
     When the distinct-value table holds at most ``driver_threshold`` rows
     (the train_bpe bounded-artifact precedent) the order statistics
@@ -514,9 +585,7 @@ def exact_quantiles(
     count map, so BOUNDED-cardinality columns were never the risk; the
     continuous (all-distinct) columns that are stay on distsort.
     """
-    for p in probs:
-        if not (0.0 <= p <= 1.0):
-            raise ValueError("each prob must be in [0, 1]")
+    _check_probs(probs)
     from .._cache import register_cache
 
     c = F.col(col).cast("double") if isinstance(col, str) else col.cast("double")
@@ -524,85 +593,7 @@ def exact_quantiles(
     dv = register_cache(
         base.groupBy("__v__").agg(F.count(F.lit(1)).alias("__cnt__"))
     )
-
-    def _fallback_nan() -> "list[float | None]":
-        row = sdf.agg(
-            F.percentile(c, F.array(*[F.lit(float(p)) for p in probs])).alias("b")
-        ).first()
-        arr = row["b"] if row is not None else None
-        return [None] * len(probs) if arr is None else [float(x) for x in arr]
-
-    import math
-
-    ndv = dv.count()
-    if ndv == 0:
-        return [None] * len(probs)
-    if ndv <= int(driver_threshold):
-        pairs = sorted(
-            (r["__v__"], int(r["__cnt__"])) for r in dv.collect()
-        )
-        if any(math.isnan(v) for v, _ in pairs):
-            return _fallback_nan()
-        n = sum(cnt for _, cnt in pairs)
-        # order statistic k (0-based) via the cumulative counts
-        cum: list[int] = []
-        t = 0
-        for _, cnt in pairs:
-            t += cnt
-            cum.append(t)
-
-        def _at(k: int) -> float:
-            import bisect
-
-            return float(pairs[bisect.bisect_right(cum, k)][0])
-
-        out: "list[float | None]" = []
-        for p in probs:
-            pos = (n - 1) * float(p)
-            lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-            lo_v, hi_v = _at(lo_i), _at(hi_i)
-            out.append(lo_v + (hi_v - lo_v) * (pos - math.floor(pos)))
-        return out
-    has_nan = dv.filter(F.isnan("__v__")).limit(1).count()
-    if has_nan:
-        return _fallback_nan()
-    offs, bcol, totals = with_bucket_offsets(
-        dv, "__v__", {"c": F.col("__cnt__")}, nbuckets=nbuckets
-    )
-    n = int(totals["c"] or 0)
-    if n == 0:
-        return [None] * len(probs)
-    import math
-
-    targets: list[int] = []
-    fracs: list[tuple[int, int, float]] = []  # (lo_idx, hi_idx, frac)
-    for p in probs:
-        pos = (n - 1) * float(p)
-        lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-        fracs.append((lo_i, hi_i, pos - math.floor(pos)))
-        targets.extend([lo_i, hi_i])
-    targets = sorted(set(targets))
-    w = Window.partitionBy(bcol).orderBy("__v__").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    start = F.col("__off_c__") + F.coalesce(F.sum("__cnt__").over(w), F.lit(0.0))
-    staged = offs.select(
-        "__v__", start.alias("__s__"), (start + F.col("__cnt__")).alias("__e__")
-    )
-    row = staged.agg(
-        *[
-            F.min(
-                F.when((F.col("__s__") <= i) & (F.lit(i) < F.col("__e__")), F.col("__v__"))
-            ).alias(f"t{i}")
-            for i in targets
-        ]
-    ).first()
-    at = {i: float(row[f"t{i}"]) for i in targets}
-    out: list[float | None] = []
-    for lo_i, hi_i, frac in fracs:
-        lo_v, hi_v = at[lo_i], at[hi_i]
-        out.append(lo_v + (hi_v - lo_v) * frac)
-    return out
+    return _order_stats(sdf, col, dv, dv.count(), probs, driver_threshold)
 
 
 __all__.append("exact_quantiles")
@@ -612,7 +603,6 @@ def exact_quantiles_multi(
     sdf: SparkDF,
     cols: "dict[str, Column | str]",
     probs: "list[float]",
-    nbuckets: "int | None" = None,
     driver_threshold: int = 65_536,
 ) -> "dict[str, list[float | None]]":
     """``exact_quantiles`` for SEVERAL columns in ONE shared input pass —
@@ -620,16 +610,10 @@ def exact_quantiles_multi(
     re-ran the full upstream scan+combine once per column).  One unpivot
     (explode of per-column structs) feeds one map-side-combined
     (column, value) distinct-count aggregate, persisted; each column's
-    order statistics then resolve against that cached table with the
-    IDENTICAL per-column arithmetic as ``exact_quantiles`` (driver-side
-    selection under ``driver_threshold`` distinct values, the distsort
-    bucket machinery above it, Spark-Percentile interpolation bit-for-bit
-    in both).  Returns {name: [quantile per prob]}."""
-    for p in probs:
-        if not (0.0 <= p <= 1.0):
-            raise ValueError("each prob must be in [0, 1]")
-    import math
-
+    order statistics then resolve against that cached table through the
+    same ``_order_stats`` as ``exact_quantiles``.  Returns {name:
+    [quantile per prob]}."""
+    _check_probs(probs)
     from .._cache import register_cache
 
     names = list(cols)
@@ -650,93 +634,17 @@ def exact_quantiles_multi(
     )
     ndv_rows = dv.groupBy("__k__").agg(F.count(F.lit(1)).alias("__ndv__")).collect()
     ndv = {r["__k__"]: int(r["__ndv__"]) for r in ndv_rows}
-
-    out: "dict[str, list[float | None]]" = {}
-    for name in names:
-        n_distinct = ndv.get(name, 0)
-        if n_distinct == 0:
-            out[name] = [None] * len(probs)
-            continue
-        col_dv = dv.filter(F.col("__k__") == name).select("__v__", "__cnt__")
-        if n_distinct <= int(driver_threshold):
-            pairs = sorted((r["__v__"], int(r["__cnt__"])) for r in col_dv.collect())
-            if any(math.isnan(v) for v, _ in pairs):
-                out[name] = _percentile_fallback(sdf, cols[name], probs)
-                continue
-            n = sum(cnt for _, cnt in pairs)
-            cum: list[int] = []
-            t = 0
-            for _, cnt in pairs:
-                t += cnt
-                cum.append(t)
-
-            def _at(k: int) -> float:
-                import bisect
-
-                return float(pairs[bisect.bisect_right(cum, k)][0])
-
-            vals: "list[float | None]" = []
-            for p in probs:
-                pos = (n - 1) * float(p)
-                lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-                lo_v, hi_v = _at(lo_i), _at(hi_i)
-                vals.append(lo_v + (hi_v - lo_v) * (pos - math.floor(pos)))
-            out[name] = vals
-            continue
-        if col_dv.filter(F.isnan("__v__")).limit(1).count():
-            out[name] = _percentile_fallback(sdf, cols[name], probs)
-            continue
-        offs, bcol, totals = with_bucket_offsets(
-            col_dv, "__v__", {"c": F.col("__cnt__")}, nbuckets=nbuckets
+    return {
+        name: _order_stats(
+            sdf,
+            cols[name],
+            dv.filter(F.col("__k__") == name).select("__v__", "__cnt__"),
+            ndv.get(name, 0),
+            probs,
+            driver_threshold,
         )
-        n = int(totals["c"] or 0)
-        if n == 0:
-            out[name] = [None] * len(probs)
-            continue
-        targets: list[int] = []
-        fracs: list[tuple[int, int, float]] = []
-        for p in probs:
-            pos = (n - 1) * float(p)
-            lo_i, hi_i = int(math.floor(pos)), int(math.ceil(pos))
-            fracs.append((lo_i, hi_i, pos - math.floor(pos)))
-            targets.extend([lo_i, hi_i])
-        targets = sorted(set(targets))
-        w = Window.partitionBy(bcol).orderBy("__v__").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        start = F.col("__off_c__") + F.coalesce(F.sum("__cnt__").over(w), F.lit(0.0))
-        staged = offs.select(
-            "__v__", start.alias("__s__"), (start + F.col("__cnt__")).alias("__e__")
-        )
-        row = staged.agg(
-            *[
-                F.min(
-                    F.when(
-                        (F.col("__s__") <= i) & (F.lit(i) < F.col("__e__")),
-                        F.col("__v__"),
-                    )
-                ).alias(f"t{i}")
-                for i in targets
-            ]
-        ).first()
-        at = {i: float(row[f"t{i}"]) for i in targets}
-        vals = []
-        for lo_i, hi_i, frac in fracs:
-            lo_v, hi_v = at[lo_i], at[hi_i]
-            vals.append(lo_v + (hi_v - lo_v) * frac)
-        out[name] = vals
-    return out
-
-
-def _percentile_fallback(sdf, col, probs) -> "list[float | None]":
-    c = F.col(col) if isinstance(col, str) else col
-    row = sdf.agg(
-        F.percentile(
-            c.cast("double"), F.array(*[F.lit(float(p)) for p in probs])
-        ).alias("b")
-    ).first()
-    arr = row["b"] if row is not None else None
-    return [None] * len(probs) if arr is None else [float(x) for x in arr]
+        for name in names
+    }
 
 
 __all__.append("exact_quantiles_multi")

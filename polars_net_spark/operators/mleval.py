@@ -51,7 +51,7 @@ def auc_report(
     is one fused reduce.  Labels are truthy (> 0); null scores/labels
     drop.  Output (1 row): auc, gini (2·AUC−1), n_pos, n_neg.  AUC is
     null when either class is empty."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     sdf = _sdf(frame)
     s = F.col(score_col).cast("double")
@@ -64,14 +64,8 @@ def auc_report(
             F.count(F.lit(1)).alias("__c__"), F.sum(y).alias("__cp__")
         )
     )
-    g3, gb, _tot = with_bucket_offsets(g, "__s__", {"c": F.col("__c__")})
-    wexcl = (
-        Window.partitionBy(gb)
-        .orderBy("__s__")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    c_lt = F.col("__off_c__") + F.coalesce(F.sum("__c__").over(wexcl), F.lit(0))
-    avg_rank = c_lt + (F.col("__c__") + 1) / 2.0
+    g3, _tot = with_sums_below(g, "__s__", {"c": F.col("__c__")})
+    avg_rank = F.col("__below_c__") + (F.col("__c__") + 1) / 2.0
     stats = g3.select(
         "__c__", "__cp__", avg_rank.alias("__ar__")
     ).agg(

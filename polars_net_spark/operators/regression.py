@@ -405,7 +405,7 @@ def mann_whitney_u(
         g.alias("__g__"), v.alias("__v__")
     )
     from .._cache import register_cache
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     # avg_rank of a tie group of size t after c earlier rows = c + (t+1)/2,
     # so ra = Σ_groups count_a · (cum_before + (cnt+1)/2); the tie term
@@ -417,14 +417,8 @@ def mann_whitney_u(
             F.count(F.when(F.col("__g__") == group_a, F.lit(1))).alias("__ca__"),
         )
     )
-    d3, gb, _tot = with_bucket_offsets(d, "__v__", {"cnt": F.col("__cnt__")})
-    wexcl = (
-        Window.partitionBy(gb)
-        .orderBy(F.col("__v__"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cumb = F.col("__off_cnt__") + F.coalesce(F.sum("__cnt__").over(wexcl), F.lit(0))
-    avg_rank = cumb + (F.col("__cnt__") + F.lit(1)) / 2.0
+    d3, _tot = with_sums_below(d, "__v__", {"cnt": F.col("__cnt__")})
+    avg_rank = F.col("__below_cnt__") + (F.col("__cnt__") + F.lit(1)) / 2.0
     staged = d3.select("__cnt__", "__ca__", avg_rank.alias("__r__"))
     agg = staged.agg(
         F.sum(F.when(F.col("__ca__") > 0, F.col("__ca__") * F.col("__r__"))).alias("ra"),
@@ -490,23 +484,16 @@ def spearman_corr(
         )
     else:
         from .._cache import register_cache
-        from .distsort import with_bucket_offsets
+        from .distsort import with_sums_below
 
         base = register_cache(base)
 
         def rank_table(col: str, out: str):
             d = base.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt__"))
-            d3, gb, _tot = with_bucket_offsets(d, col, {"cnt": F.col("__cnt__")})
-            wexcl = (
-                Window.partitionBy(gb)
-                .orderBy(F.col(col))
-                .rowsBetween(Window.unboundedPreceding, -1)
-            )
-            cumb = F.col("__off_cnt__") + F.coalesce(
-                F.sum("__cnt__").over(wexcl), F.lit(0)
-            )
+            d3, _tot = with_sums_below(d, col, {"cnt": F.col("__cnt__")})
             return d3.select(
-                col, (cumb + (F.col("__cnt__") + F.lit(1)) / 2.0).alias(out)
+                col,
+                (F.col("__below_cnt__") + (F.col("__cnt__") + F.lit(1)) / 2.0).alias(out),
             )
 
         # the rank tables are distinct-value sized — AQE broadcasts the
@@ -1339,26 +1326,24 @@ def ipf_weights(
         if not erows or n_total <= 0:
             # no calibratable cells: mirror the distributed path's empty
             # result (joins drop everything)
-            out = spark.createDataFrame(
-                [],
-                f"{row_col} string, {col_col} string, n bigint, "
-                "weight double, mass double",
+            from pyspark.sql.types import (
+                DoubleType, LongType, StringType, StructField, StructType,
             )
-            return LazyFrame(out)
+
+            schema = StructType([
+                StructField(row_col, StringType()),
+                StructField(col_col, StringType()),
+                StructField("n", LongType()),
+                StructField("weight", DoubleType()),
+                StructField("mass", DoubleType()),
+            ])
+            return LazyFrame(spark.createDataFrame([], schema))
         m = {(rr, cc): n / n_total for rr, cc, n, _, _ in erows}
         tr = {rr: t for rr, _, _, t, _ in erows}
         tc = {cc: t for _, cc, _, _, t in erows}
         for _ in range(int(iterations)):
-            rs: dict = {}
-            for (rr, cc), v in m.items():
-                rs[rr] = rs.get(rr, 0.0) + v
-            for key in m:
-                m[key] = m[key] * tr[key[0]] / rs[key[0]]
-            cs: dict = {}
-            for (rr, cc), v in m.items():
-                cs[cc] = cs.get(cc, 0.0) + v
-            for key in m:
-                m[key] = m[key] * tc[key[1]] / cs[key[1]]
+            _ipf_rake(m, tr, 0)
+            _ipf_rake(m, tc, 1)
         staged = spark.createDataFrame(
             [
                 (rr, cc, n, m[(rr, cc)], n / n_total)
@@ -1410,6 +1395,23 @@ def ipf_weights(
             F.round(F.col("__m__"), round_to).alias("mass"),
         )
     return LazyFrame(out)
+
+
+def _ipf_rake(m: dict, targets: dict, axis: int) -> None:
+    """One IPF half-round in place: scale each cell by target / marginal on
+    ``axis`` (0 = row, 1 = col), with the distributed path's Spark
+    semantics — a marginal sums its non-null cells (null when all are
+    null), and a null cell or a zero or null marginal gives a null cell,
+    as ``x / 0`` does with ANSI off."""
+    sums: dict = {}
+    for key, v in m.items():
+        if v is None:
+            sums.setdefault(key[axis], None)
+        else:
+            sums[key[axis]] = (sums.get(key[axis]) or 0.0) + v
+    for key, v in m.items():
+        s = sums[key[axis]]
+        m[key] = None if v is None or not s else v * targets[key[axis]] / s
 
 
 __all__.append("ipf_weights")
@@ -2940,7 +2942,7 @@ def energy_distance(
     buckets + driver offsets, and the pair-sums fall out of ONE fused
     reduce — no self-join, no window over the raw data.  Output (1 row):
     energy_dist, e_cross, e_within_a, e_within_b, n_a, n_b."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
@@ -2955,7 +2957,7 @@ def energy_distance(
             F.sum(isa).alias("__ca__"), F.sum(isb).alias("__cb__")
         )
     )
-    offs, gb, tot = with_bucket_offsets(
+    offs, tot = with_sums_below(
         cells, "__v__",
         {
             "ca": F.col("__ca__"),
@@ -2967,19 +2969,10 @@ def energy_distance(
     na, nb = float(tot["ca"]), float(tot["cb"])
     if na < 1 or nb < 1:
         raise ValueError("energy_distance: both groups need at least 1 row")
-    w = Window.partitionBy(gb).orderBy("__v__").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    # strictly-before-this-cell prefix state per group (global via offsets);
-    # within-cell pairs are at distance zero, so they never contribute
-    pca = F.col("__off_ca__") + F.coalesce(F.sum("__ca__").over(w), F.lit(0.0))
-    pcb = F.col("__off_cb__") + F.coalesce(F.sum("__cb__").over(w), F.lit(0.0))
-    psa = F.col("__off_sa__") + F.coalesce(
-        F.sum(F.col("__ca__") * F.col("__v__")).over(w), F.lit(0.0)
-    )
-    psb = F.col("__off_sb__") + F.coalesce(
-        F.sum(F.col("__cb__") * F.col("__v__")).over(w), F.lit(0.0)
-    )
+    # strictly-before-this-cell prefix state per group; within-cell pairs
+    # are at distance zero, so they never contribute
+    pca, pcb = F.col("__below_ca__"), F.col("__below_cb__")
+    psa, psb = F.col("__below_sa__"), F.col("__below_sb__")
     red = offs.select(
         (
             F.col("__cb__") * (pca * F.col("__v__") - psa)
@@ -3032,7 +3025,7 @@ def pettitt_test(
     + (ties+1)/2) joined back on the value, then the U scan rides a
     second distsort pass keyed on time — no data-sized window, no
     self-join.  Output (1 row): split_at, u_stat, k_stat, n, p_value."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_bucket_offsets, with_sums_below
 
     sdf = _sdf(frame)
     t = F.col(time_col).cast("double")
@@ -3101,14 +3094,11 @@ def pettitt_test(
         cells = register_cache(
             series.groupBy("__v__").agg(F.count(F.lit(1)).alias("__c__"))
         )
-        voffs, vgb, vtot = with_bucket_offsets(cells, "__v__", {"c": F.col("__c__")})
+        voffs, vtot = with_sums_below(cells, "__v__", {"c": F.col("__c__")})
         n = int(vtot["c"])
         if n < 3:
             raise ValueError("pettitt_test needs at least 3 distinct times")
-        wv = Window.partitionBy(vgb).orderBy("__v__").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        below = F.col("__off_c__") + F.coalesce(F.sum("__c__").over(wv), F.lit(0.0))
+        below = F.col("__below_c__")
         ranks = voffs.select(
             "__v__",
             (below + (F.col("__c__") + F.lit(1.0)) / F.lit(2.0)).alias("__r__"),
@@ -3403,7 +3393,7 @@ def cramer_von_mises(
     asymptotic null law has no closed form, so the statistic is reported
     without a p (compare to the 0.461/0.743 classic 5%/1% critical
     values).  Output (1 row): t_stat, u_stat, n_a, n_b."""
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     sdf = _sdf(frame)
     v = F.col(value_col).cast("double")
@@ -3418,18 +3408,14 @@ def cramer_von_mises(
             F.sum(isa).alias("__ca__"), F.sum(isb).alias("__cb__")
         )
     )
-    offs, gb, tot = with_bucket_offsets(
+    offs, tot = with_sums_below(
         cells, "__v__", {"ca": F.col("__ca__"), "cb": F.col("__cb__")}
     )
     n, m = float(tot["ca"]), float(tot["cb"])
     if n < 1 or m < 1:
         raise ValueError("cramer_von_mises: both groups need at least 1 row")
     N = n + m
-    w = Window.partitionBy(gb).orderBy("__v__").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ta = F.col("__off_ca__") + F.coalesce(F.sum("__ca__").over(w), F.lit(0.0))
-    tb = F.col("__off_cb__") + F.coalesce(F.sum("__cb__").over(w), F.lit(0.0))
+    ta, tb = F.col("__below_ca__"), F.col("__below_cb__")
     tp = ta + tb  # pooled strictly-before count
     ct = F.col("__ca__") + F.col("__cb__")
     rbar = tp + (ct + F.lit(1.0)) / F.lit(2.0)
@@ -4573,24 +4559,18 @@ def kruskal_wallis(
         g.alias("__g__"), v.alias("__v__")
     )
     from .._cache import register_cache
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     vcells = register_cache(
         base.groupBy("__v__").agg(F.count(F.lit(1)).alias("__cnt__"))
     )
-    d3, gb, tot = with_bucket_offsets(vcells, "__v__", {"cnt": F.col("__cnt__")})
+    d3, tot = with_sums_below(vcells, "__v__", {"cnt": F.col("__cnt__")})
     n_total = float(tot["cnt"])
     if n_total < 3:
         raise ValueError("kruskal_wallis needs at least 3 values")
-    wexcl = (
-        Window.partitionBy(gb)
-        .orderBy(F.col("__v__"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cumb = F.col("__off_cnt__") + F.coalesce(F.sum("__cnt__").over(wexcl), F.lit(0))
     ranks = d3.select(
         "__v__",
-        (cumb + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__r__"),
+        (F.col("__below_cnt__") + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__r__"),
         F.col("__cnt__"),
     )
     gcells = base.groupBy("__v__", "__g__").agg(F.count(F.lit(1)).alias("__cg__"))
@@ -5049,15 +5029,15 @@ def wilcoxon_signed_rank(
         .select(F.abs("__d__").alias("__a__"), (F.col("__d__") > 0).alias("__pos__"))
     )
     from .._cache import register_cache
-    from .distsort import with_bucket_offsets
+    from .distsort import with_sums_below
 
     base = register_cache(base)
     # persisted: the boundary sketch and the offsets aggregate each read it
     d = register_cache(base.groupBy("__a__").agg(F.count(F.lit(1)).alias("__cnt__")))
     # the tie term Σ(c³−c) rides the SAME per-bucket aggregate as the
-    # prefix offsets (with_prefix_offsets returns grand totals), so the
+    # prefix offsets (with_sums_below returns grand totals), so the
     # separate tie-scalar job the r11 version ran is fused away
-    d3, gb, _tot = with_bucket_offsets(
+    d3, _tot = with_sums_below(
         d,
         "__a__",
         {
@@ -5069,14 +5049,8 @@ def wilcoxon_signed_rank(
         },
     )
     d3 = register_cache(d3)
-    wexcl = (
-        Window.partitionBy(gb)
-        .orderBy(F.col("__a__"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cumb = F.col("__off_cnt__") + F.coalesce(F.sum("__cnt__").over(wexcl), F.lit(0))
     ranks = d3.select(
-        "__a__", (cumb + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__r__")
+        "__a__", (F.col("__below_cnt__") + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__r__")
     )
     tie_val = float(_tot["tie"] or 0.0)
     joined = base.join(ranks, "__a__")
@@ -5269,10 +5243,10 @@ def brunner_munzel(
     estimate.
 
     Combined midranks ride the spearman/wilcoxon distsort rank-table
-    construction; within-group midranks get the same treatment with the
-    driver prefix keyed by (group, bucket) (2·nbuckets rows) — no
-    single-partition window on either ranking.  Output (1 row): w, df,
-    p_hat, mean_rank_a, mean_rank_b, n_a, n_b."""
+    construction; within-group midranks share one bucket job over the
+    (group, value) cells, whose per-bucket rows carry both groups'
+    counts — no single-partition window on either ranking.  Output
+    (1 row): w, df, p_hat, mean_rank_a, mean_rank_b, n_a, n_b."""
     from .._cache import register_cache
 
     sdf = _sdf(frame)
@@ -5289,62 +5263,34 @@ def brunner_munzel(
     cells = register_cache(
         base.groupBy("__v__").agg(F.count(F.lit(1)).alias("__cnt__"))
     )
-    from .distsort import with_bucket_offsets
+    from .distsort import with_bucket_offsets, with_sums_below
 
-    cells2, gb, _tot = with_bucket_offsets(cells, "__v__", {"cnt": F.col("__cnt__")})
-    wexcl = (
-        Window.partitionBy(gb)
-        .orderBy(F.col("__v__"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cumb = F.col("__off_cnt__") + F.coalesce(F.sum("__cnt__").over(wexcl), F.lit(0))
+    cells2, _tot = with_sums_below(cells, "__v__", {"cnt": F.col("__cnt__")})
     comb = cells2.select(
-        "__v__", (cumb + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__R__")
+        "__v__", (F.col("__below_cnt__") + (F.col("__cnt__") + F.lit(1)) / 2.0).alias("__R__")
     )
 
-    # within-group midranks: (group, value) cells; driver prefix keyed by
-    # (group, bucket) — bounded by 2·nbuckets rows
+    # within-group midranks: (group, value) cells, ONE fused bucket job whose
+    # per-bucket rows carry both groups' counts; each row takes its own
+    # group's offset
     gcells = register_cache(
         base.groupBy("__g__", "__v__").agg(F.count(F.lit(1)).alias("__c__"))
     )
-    # FUSED (r13): the second boundary sketch and the (group, bucket) sums
-    # come from ONE driver job — per-bucket rows carry BOTH groups' counts
-    from .distsort import BUCKET_COL, _bucket_literal_expr, _fused_sketch_sums
-
-    bounds2, rows2 = _fused_sketch_sums(
+    gcells2, gb2, _ = with_bucket_offsets(
         gcells, "__v__",
         {
             "sa": F.when(F.col("__g__") == "a", F.col("__c__")).otherwise(F.lit(0)),
             "sb": F.when(F.col("__g__") == "b", F.col("__c__")).otherwise(F.lit(0)),
         },
-        False, None, 10_000,
     )
-    gb2 = BUCKET_COL
-    gcells = gcells.withColumn(gb2, _bucket_literal_expr("__v__", bounds2, False))
-    offsets: dict = {}
-    running: dict = {}
-    for r in rows2:
-        for grp, fld in (("a", "sa"), ("b", "sb")):
-            offsets[(grp, r[gb2])] = running.get(grp, 0.0)
-            running[grp] = offsets[(grp, r[gb2])] + float(r[fld] or 0)
-    mp = F.create_map(
-        *[
-            lit
-            for (grp, bk), off in offsets.items()
-            for lit in (F.concat_ws("|", F.lit(grp), F.lit(str(int(bk)))), F.lit(float(off)))
-        ]
-    )
-    off2 = F.coalesce(
-        F.element_at(mp, F.concat_ws("|", F.col("__g__"), F.col(gb2).cast("string"))),
-        F.lit(0.0),
-    )
+    off2 = F.when(F.col("__g__") == "a", F.col("__off_sa__")).otherwise(F.col("__off_sb__"))
     wexcl2 = (
         Window.partitionBy("__g__", gb2)
         .orderBy(F.col("__v__"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cumb2 = off2 + F.coalesce(F.sum("__c__").over(wexcl2), F.lit(0))
-    within = gcells.select(
+    within = gcells2.select(
         "__g__", "__v__", (cumb2 + (F.col("__c__") + F.lit(1)) / 2.0).alias("__wr__")
     )
 

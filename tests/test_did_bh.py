@@ -129,6 +129,36 @@ class TestIpf:
         with pytest.raises(ValueError):
             ipf_weights(df, "r", "c", {}, {"x": 1})
 
+    @pytest.mark.parametrize(
+        "rt, ct",
+        [({"a": 0.0, "b": 1.0, "c": 1.0}, {"x": 1.0, "y": 1.0}),
+         ({"a": 1.0, "b": 1.0, "c": 0.0}, {"x": 1.0, "y": 0.0})],
+        ids=["zero_row_share", "zero_row_and_col_share"],
+    )
+    def test_zero_target_share_matches_distributed(self, spark, rt, ct):
+        from polars_net_spark.operators.regression import ipf_weights
+
+        data = ([("a", "x")] * 3 + [("a", "y")] * 2 + [("b", "x")] * 4
+                + [("b", "y")] + [("c", "y")] * 2)
+        df = spark.createDataFrame(data, "r string, c string")
+        drv = sorted(rows(ipf_weights(df, "r", "c", rt, ct)))
+        # zero-share categories absent from the data push the grid past
+        # the driver bound without changing the fit
+        pad = {f"pad{i}": 0.0 for i in range(4100)}
+        dist = sorted(rows(ipf_weights(df, "r", "c", {**rt, **pad}, ct)))
+        assert drv == dist
+        # cells of a zero-share category divide by a zero marginal: null,
+        # not a raise
+        assert any(r[3:] == (None, None) for r in drv)
+
+    def test_empty_cells_with_quoted_column_names(self, spark):
+        from polars_net_spark.operators.regression import ipf_weights
+
+        df = spark.createDataFrame([("a", "x")], "`row key` string, `c-1` string")
+        out = ipf_weights(df, "row key", "c-1", {"zzz": 1.0}, {"x": 1.0}).collect()
+        assert out.columns == ["row key", "c-1", "n", "weight", "mass"]
+        assert out.rows() == []
+
 
 class TestKendall:
     def test_matches_scipy_example(self, spark):
